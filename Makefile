@@ -4,8 +4,10 @@
 SF_DIR ?= /root/testdata/sf0.1
 ORACLE_SF ?= /root/testdata/sf0.01
 KAFKA_BOOTSTRAP ?= localhost:9092
+W ?= stream
+SEED ?= 1
 
-.PHONY: test oracle bench kafka-live
+.PHONY: test oracle bench perfbench kafka-live
 
 test:
 	python -m pytest tests/ -x -q
@@ -15,6 +17,12 @@ oracle:
 
 bench:
 	SPARK_GRAFT_SF_DIR=$(SF_DIR) python bench.py
+
+# The pipeline benchmark (perfbench/README.md): one untraced run of
+# workload W (stream or backfill_history), then the benchmark's tests.
+perfbench:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 8 --trace 0
+	python3 -m pytest perfbench/tests -q
 
 # Live-broker Kafka round-trip (docs/KAFKA_RUNBOOK.md): requires a
 # reachable broker AND the spark-sql-kafka connector jar.  The same

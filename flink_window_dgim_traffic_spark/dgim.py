@@ -128,10 +128,14 @@ class DGIM:
         self._expire(self.latest_ts)
 
     def bulk_add_ones(self, ts_sorted: Sequence[int]) -> None:
-        """Add many 1-bits at once, ``ts_sorted`` ascending — the
-        closed-form batch path for the streaming processors (VERDICT
-        r12 ask #3), bit-identical to calling :meth:`add` per element
-        (property-tested in tests/test_dgim.py).
+        """Add many 1-bits at once — the closed-form batch path for
+        the TWS processors, the replay operators and two-phase
+        phase 1, bit-identical to calling :meth:`add` per element
+        (property-tested in tests/test_dgim_bulk.py).
+
+        ``ts_sorted`` must be ascending; unsorted input raises
+        ``ValueError``, because the bucket boundaries below are read
+        by position and would silently come out wrong.
 
         Derivation: with no expiry, the compaction cascade maintains
         the unique ZEROLESS BINARY representation of the total 1-bit
@@ -147,13 +151,15 @@ class DGIM:
         that position.  O(log n) per batch instead of O(n·log²n).
 
         Falls back to the exact sequential loop whenever the closed
-        form's preconditions do not hold: out-of-order arrival
+        form's preconditions do not hold: a batch older than the state
         (min new ts < latest_ts), possible expiry (timestamp spread
         reaching window_size), or a state whose sizes are not the
         zeroless representation (i.e. it has already seen expiry)."""
         n_new = len(ts_sorted)
         if n_new == 0:
             return
+        if any(a > b for a, b in zip(ts_sorted, ts_sorted[1:])):
+            raise ValueError("bulk_add_ones needs timestamps in ascending order")
         t_min, t_max = int(ts_sorted[0]), int(ts_sorted[-1])
         b = self.buckets
         n0 = sum(bk[1] for bk in b)

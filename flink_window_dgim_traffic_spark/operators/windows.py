@@ -23,11 +23,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from flink_window_dgim_traffic_spark.dgim import DGIM, MODE_JAVA
+from flink_window_dgim_traffic_spark.dgim import DGIM, MODE_JAVA, MODE_PYFLINK
 
 # Spark datetime pattern ↔ strftime used for golden/oracle string output
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -214,21 +214,29 @@ def hop_dgim(
 # ----------------------------------------------------------------------
 # DGIM fast path: the DGIM_ESTIMATE → g(sum(bit)) logical rewrite
 # ----------------------------------------------------------------------
-def _count_est_udf(mode: str):
-    """Arrow-batched lookup ``ones → g(ones)`` (dgim.count_estimate_table)."""
+def dgim_estimate_col(n, mode: str = MODE_JAVA) -> Column:
+    """The DGIM closed form ``g(n)`` (``dgim.count_estimate_closed``)
+    as one native Column over a 1-bit count ``n`` (a Column or a
+    column name): the estimate a sketch whose horizon covers the whole
+    window reports after ``n`` 1-bits, with no Python on the path.
 
-    @pandas_udf("bigint")
-    def g(ones: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from flink_window_dgim_traffic_spark.dgim import count_estimate_table
-
-        n = ones.fillna(0).to_numpy(dtype="int64")
-        hi = int(n.max()) if len(n) else 0
-        tab = np.asarray(count_estimate_table(hi, mode), dtype="int64")
-        return pd.Series(tab[n])
-
-    return g
+    ``m = length(bin(n + 1)) - 2`` is ``floor(log2(n + 1)) - 1`` in
+    exact integer arithmetic (``log2`` is floating point and off by
+    one at exact powers of two), and the oldest bucket is
+    ``2^m = shiftleft(1L, m)``.  java mode:
+    ``CASE WHEN n IS NULL OR n <= 0 THEN 0 WHEN n = 1 THEN 1
+    ELSE n - 2^m + (2^m + 1) div 2 END``; pyflink mode floor-halves
+    even a single bucket: ``n - 2^m + 2^m div 2``.  NULL gives 0."""
+    if mode not in (MODE_JAVA, MODE_PYFLINK):
+        raise ValueError(f"mode must be java or pyflink, got {mode!r}")
+    n = (F.col(n) if isinstance(n, str) else n).cast("bigint")
+    m = F.length(F.bin(n + 1)) - 2
+    pw = F.call_function("shiftleft", F.lit(1).cast("bigint"), m)
+    half = F.shiftright(pw + 1 if mode == MODE_JAVA else pw, 1)
+    est = F.when(n.isNull() | (n <= 0), F.lit(0).cast("bigint"))
+    if mode == MODE_JAVA:
+        est = est.when(n == 1, n)
+    return est.otherwise(n - pw + half)
 
 
 def tumble_dgim_fast(
@@ -241,8 +249,8 @@ def tumble_dgim_fast(
     the 1-bit count ⇒ ``DGIM_ESTIMATE ≡ g(sum(bit))``.
 
     The whole plan is JVM-side (scan → map-side partial sum → shuffle
-    of tiny (window, count) pairs → final sum); Python is one memoized
-    table lookup per output row.  Result is *identical* to
+    of tiny (window, count) pairs → final sum → the
+    :func:`dgim_estimate_col` projection).  Result is *identical* to
     :func:`tumble_dgim` replay (asserted in tests), at exact-count
     cost — the 100 TB shape for this query family."""
     return (
@@ -251,7 +259,7 @@ def tumble_dgim_fast(
         .agg(F.sum("bit").cast("bigint").alias("exact_count"))
         .select(
             F.date_format(F.col("w.end"), TS_FMT_SPARK).alias("window_end"),
-            _count_est_udf(mode)(F.col("exact_count")).alias("count_estimate"),
+            dgim_estimate_col("exact_count", mode).alias("count_estimate"),
             "exact_count",
         )
     )
@@ -279,7 +287,7 @@ def tumble_dgim_bound(
     (no rounding step — bit-identical across engines, unlike
     ``round(x, 6)`` whose HALF_UP/HALF_EVEN difference bites exactly
     when ``exact`` is a power of two)."""
-    est = _count_est_udf(mode)(F.col("exact_count"))
+    est = dgim_estimate_col("exact_count", mode)
     return (
         with_bit(events)
         .groupBy(F.window("ts", f"{size_sec} seconds").alias("w"))
@@ -321,7 +329,7 @@ def tumble_dgim_by_user_fast(
         .select(
             F.date_format(F.col("w.end"), TS_FMT_SPARK).alias("window_end"),
             "user_id",
-            _count_est_udf(mode)(F.col("exact_count")).alias("count_estimate"),
+            dgim_estimate_col("exact_count", mode).alias("count_estimate"),
             "exact_count",
         )
     )
@@ -346,7 +354,7 @@ def hop_dgim_fast(
         .select(
             F.date_format(F.col("w.start"), TS_FMT_SPARK).alias("window_start"),
             F.date_format(F.col("w.end"), TS_FMT_SPARK).alias("window_end"),
-            _count_est_udf(mode)(F.col("exact_count")).alias("count_estimate"),
+            dgim_estimate_col("exact_count", mode).alias("count_estimate"),
             "exact_count",
         )
     )
@@ -748,7 +756,7 @@ def hop_dgim_bound(
     oracle can recompute the VALUE independently — this converts the
     hop-DGIM estimate from rows-only to hash-anchored.  Same
     ``rel_err`` no-rounding discipline as the tumble twin."""
-    est = _count_est_udf(mode)(F.col("exact_count"))
+    est = dgim_estimate_col("exact_count", mode)
     return (
         with_bit(events)
         .groupBy(
@@ -814,7 +822,7 @@ def cumulate_dgim_bound(
         (ws + F.lit(max_size_sec)).cast("bigint"),
         F.lit(step_sec).cast("bigint"),
     )
-    est = _count_est_udf(mode)(F.col("exact_count"))
+    est = dgim_estimate_col("exact_count", mode)
     return (
         e.select("bit", ws.alias("ws"), F.explode(ends).alias("we"))
         .groupBy("ws", "we")
@@ -1942,7 +1950,7 @@ def session_dgim(
     give a DIFFERENT (smaller) answer under a horizon=gap_sec sketch;
     that variant is intentionally not what this operator computes.
     Plan shape: one session-window aggregation (map-side
-    partial), Python only as the memoized g() lookup per output row.
+    partial) and the native :func:`dgim_estimate_col` projection.
 
     Output: (user_id, session_start, session_end_plus_gap,
     count_estimate, exact_count, n_rows) — session bounds formatted
@@ -1966,7 +1974,7 @@ def session_dgim(
             F.date_format("w.end", TS_FMT_SPARK).alias(
                 "session_end_plus_gap"
             ),
-            _count_est_udf(mode)(F.col("exact_count")).alias(
+            dgim_estimate_col("exact_count", mode).alias(
                 "count_estimate"
             ),
             "exact_count",

@@ -890,7 +890,8 @@ def _stream_tumble_dgim_tws(s: SparkSession, d: str) -> DataFrame:
     closed form (oracle = ``_tumble_dgim_sql(n_rows=True)``).  If the
     harness's JVM predates the runtime priming (the TWS driver worker
     only sees PYTHONPATH captured at JVM start), falls back to the
-    output-identical ``applyInPandasWithState`` twin so the
+    output-identical native ``tumble_dgim_stream`` (built-in streaming
+    aggregation plus the closed-form projection) so the
     CORRECTNESS row still verifies the same semantics; the TWS path
     itself is e2e-pinned in tests/test_streaming.py."""
     import os
@@ -1002,12 +1003,12 @@ def _stream_tumble_dgim_tws(s: SparkSession, d: str) -> DataFrame:
         print(
             "[stream_tumble_dgim_tws] TWS unavailable "
             f"({msg.splitlines()[0][:200]}); ran on: "
-            "applyInPandasWithState twin",
+            "native tumble_dgim_stream",
             file=sys.stderr,
         )
-        # output-identical stateful twin (tested equal); keeps the
+        # output-identical native twin (tested equal); keeps the
         # gate green on harnesses whose JVM predates runtime priming
-        name = "t_stream_dgim_apips"
+        name = "t_stream_dgim_native"
         run(tumble_dgim_stream, name)
     # update mode appends one row per (window, micro-batch); final
     # state = the row with the key's max n_rows (monotone per update)

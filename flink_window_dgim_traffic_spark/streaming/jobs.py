@@ -18,7 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_window_dgim_traffic_spark.dgim import MODE_JAVA
 from flink_window_dgim_traffic_spark.operators.parsing import ISO_US_SPARK
+from flink_window_dgim_traffic_spark.operators.windows import dgim_estimate_col
 
 TRAFFIC_SCHEMA = T.StructType(
     [
@@ -152,24 +154,34 @@ def parse_traffic(raw: DataFrame, proctime: bool = False) -> DataFrame:
     ).withColumn("ts_sec", F.unix_timestamp("ts"))
 
 
+def _window_counts(
+    parsed: DataFrame, watermark: str | None, *keys, event_time: str = "ts"
+) -> DataFrame:
+    """Per-key 1-bit and row counts (``ones_exact``, ``n_rows``) as a
+    built-in incremental aggregate whose state the engine keeps — the
+    one aggregation the exact streams and the DGIM streams
+    (``stateful_dgim``) share.  ``keys`` are evaluated against the
+    input after ``watermark`` (optional) is set on ``event_time``.
+    With a watermark, a window key's state is evicted, and later rows
+    for it are dropped, once the watermark reaches the window's end."""
+    src = parsed if watermark is None else parsed.withWatermark(event_time, watermark)
+    return src.groupBy(*keys).agg(
+        F.sum("bit").cast("bigint").alias("ones_exact"),
+        F.count(F.lit(1)).alias("n_rows"),
+    )
+
+
 def tumble_exact_stream(
-    parsed: DataFrame, size_sec: int = 60, watermark: str = "10 seconds"
+    parsed: DataFrame, size_sec: int = 60, watermark: str | None = "10 seconds"
 ) -> DataFrame:
     """Streaming W1 twin: event-time tumbling count of 1-bits.
     Watermark closes windows in append mode (the reference needs none
     because proctime windows can't be late)."""
-    return (
-        parsed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", f"{size_sec} seconds").alias("w"))
-        .agg(
-            F.sum("bit").cast("bigint").alias("ones_exact"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(
-            F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("window_end"),
-            "ones_exact",
-            "n_rows",
-        )
+    w = F.window("ts", f"{size_sec} seconds").alias("w")
+    return _window_counts(parsed, watermark, w).select(
+        F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("window_end"),
+        "ones_exact",
+        "n_rows",
     )
 
 
@@ -177,26 +189,17 @@ def hop_exact_stream(
     parsed: DataFrame,
     size_sec: int = 60,
     slide_sec: int = 10,
-    watermark: str = "10 seconds",
+    watermark: str | None = "10 seconds",
 ) -> DataFrame:
     """Streaming W2 twin (HOP window, composite key like S5)."""
-    return (
-        parsed.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", f"{size_sec} seconds", f"{slide_sec} seconds").alias("w")
-        )
-        .agg(
-            F.sum("bit").cast("bigint").alias("ones_exact"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("window_end"),
-            "ones_exact",
-            "n_rows",
-        )
+    w = F.window("ts", f"{size_sec} seconds", f"{slide_sec} seconds").alias("w")
+    return _window_counts(parsed, watermark, w).select(
+        F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
+            "window_start"
+        ),
+        F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("window_end"),
+        "ones_exact",
+        "n_rows",
     )
 
 
@@ -204,7 +207,7 @@ def cumulate_exact_stream(
     parsed: DataFrame,
     max_size_sec: int = 60,
     step_sec: int = 10,
-    watermark: str = "10 seconds",
+    watermark: str | None = "10 seconds",
 ) -> DataFrame:
     """Streaming CUMULATE twin (batch: ``windows.cumulate_exact``).
 
@@ -217,7 +220,6 @@ def cumulate_exact_stream(
     ``watermark + max_size_sec`` on ``we_ts``; with that delay no
     record admitted by the source-side contract is dropped, and
     closed spans' groups age out of the state store."""
-    wm_sec = int(watermark.split()[0]) + max_size_sec
     es = F.unix_timestamp("ts")
     ws = (F.floor(es / max_size_sec) * max_size_sec).cast("bigint")
     first_end = (
@@ -228,25 +230,22 @@ def cumulate_exact_stream(
         (ws + F.lit(max_size_sec)).cast("bigint"),
         F.lit(step_sec).cast("bigint"),
     )
-    return (
-        parsed.select("bit", ws.alias("ws"), F.explode(ends).alias("we"))
-        .withColumn("we_ts", F.timestamp_seconds(F.col("we")))
-        .withWatermark("we_ts", f"{wm_sec} seconds")
-        .groupBy("ws", "we_ts")
-        .agg(
-            F.sum("bit").cast("bigint").alias("ones_exact"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(
-            F.date_format(
-                F.timestamp_seconds(F.col("ws")), "yyyy-MM-dd HH:mm:ss"
-            ).alias("window_start"),
-            F.date_format(F.col("we_ts"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_end"
-            ),
-            "ones_exact",
-            "n_rows",
-        )
+    staged = parsed.select(
+        "bit", ws.alias("ws"), F.explode(ends).alias("we")
+    ).withColumn("we_ts", F.timestamp_seconds(F.col("we")))
+    if watermark is not None:  # Spark sums repeated interval units
+        watermark = f"{watermark} {max_size_sec} seconds"
+    return _window_counts(
+        staged, watermark, "ws", "we_ts", event_time="we_ts"
+    ).select(
+        F.date_format(
+            F.timestamp_seconds(F.col("ws")), "yyyy-MM-dd HH:mm:ss"
+        ).alias("window_start"),
+        F.date_format(F.col("we_ts"), "yyyy-MM-dd HH:mm:ss").alias(
+            "window_end"
+        ),
+        "ones_exact",
+        "n_rows",
     )
 
 
@@ -329,13 +328,9 @@ def session_exact_stream(
         parsed = parsed.withColumn("_global", F.crc32(F.lit("_")) * 0)
     keys = [F.col(c) for c in (key_cols or ["_global"])]
     out_keys = list(key_cols) if key_cols else []
+    w = F.session_window("ts", f"{gap_sec} seconds").alias("w")
     return (
-        parsed.withWatermark("ts", watermark)
-        .groupBy(*keys, F.session_window("ts", f"{gap_sec} seconds").alias("w"))
-        .agg(
-            F.sum("bit").cast("bigint").alias("ones_exact"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
+        _window_counts(parsed, watermark, *keys, w)
         .select(
             *out_keys,
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -364,16 +359,19 @@ def session_dgim_stream(
     equivalence ``windows.session_dgim`` property-tests).  Closed
     sessions equal the batch operator; state stays bounded by active
     sessions via the watermark."""
-    from flink_window_dgim_traffic_spark.operators.windows import (
-        _count_est_udf,
+    return with_dgim_estimate(
+        session_exact_stream(parsed, gap_sec, watermark, key_cols)
     )
 
-    base = session_exact_stream(parsed, gap_sec, watermark, key_cols)
-    return base.select(
-        *base.columns[:-2],
-        _count_est_udf("java")(F.col("ones_exact")).alias(
-            "count_estimate"
-        ),
+
+def with_dgim_estimate(counts: DataFrame, mode: str = MODE_JAVA) -> DataFrame:
+    """Project an exact stream's ``(keys..., ones_exact, n_rows)`` to
+    the DGIM stream shape ``(keys..., count_estimate, exact_count,
+    n_rows)``, the estimate being the native closed form
+    ``g(ones_exact)`` (``windows.dgim_estimate_col``)."""
+    return counts.select(
+        *counts.columns[:-2],
+        dgim_estimate_col("ones_exact", mode).alias("count_estimate"),
         F.col("ones_exact").alias("exact_count"),
         "n_rows",
     )

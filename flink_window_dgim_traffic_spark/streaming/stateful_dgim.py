@@ -1,19 +1,28 @@
-"""Incremental streaming DGIM via ``applyInPandasWithState`` — the
-bounded-state alternative to per-window replay (SURVEY.md §7.3).
+"""Streaming DGIM per tumbling, hopping and cumulate window.
 
 The reference keeps one DGIM accumulator per open window inside
-Flink's window operator (``DGIMAggregateFunction.java:41-71``); here
-the sketch lives in the Spark state store keyed by window end, updated
-once per micro-batch and emitted in update mode.  State per key is the
-flattened bucket list — O(log² N), exactly the bound the sketch
-exists for.
+Flink's window operator (``DGIMAggregateFunction.java:41-71``).  In
+every one of these windows the sketch horizon equals the window size,
+so no bucket ever expires and the estimate is exactly the closed form
+``g(ones)`` (``dgim.count_estimate_closed``).  The three streams here
+therefore run on Spark's built-in streaming aggregation — per window
+``sum(bit)`` and ``count``, state kept by the engine, evicted by the
+watermark — followed by the native ``windows.dgim_estimate_col``
+projection, in update mode.  They are the exact twins of
+``jobs.*_exact_stream`` plus that projection; no Python runs per
+micro-batch.
+
+The ``transformWithStateInPandas`` processors below keep the real
+bucket list in the state store (O(log² N) per window, updated with
+``DGIM.bulk_add_ones``): they demonstrate the sketch on the
+current-generation stateful API and are equality-pinned against the
+native streams and batch replay in tests.
 """
 
 from __future__ import annotations
 
 import os
 from datetime import timezone
-from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql.streaming import StatefulProcessor
@@ -23,18 +32,17 @@ from flink_window_dgim_traffic_spark.dgim import (
     MODE_JAVA,
     count_estimate_closed,
 )
-
-STATE_SCHEMA = "flat array<bigint>"
+from flink_window_dgim_traffic_spark.streaming import jobs
 
 
 def _bulk_update(sk: DGIM, sub: pd.DataFrame) -> int:
     """Feed one ts-sorted batch into the sketch and return the number
     of 1-bits added.  Uses the closed-form zeroless-binary bulk insert
     (``DGIM.bulk_add_ones`` — O(log n) per batch instead of a
-    per-event Python loop; VERDICT r12 ask #3), which itself falls
-    back to exact sequential adds whenever its preconditions fail
-    (out-of-order batches, in-window expiry).  Bit-identical to the
-    r12 per-event loop — property-pinned in tests/test_dgim_bulk.py."""
+    per-event Python loop), which itself falls back to exact
+    sequential adds whenever its preconditions fail (a batch older
+    than the state, in-window expiry).  Bit-identical to a per-event
+    loop — property-pinned in tests/test_dgim_bulk.py."""
     bits = sub["bit"].to_numpy()
     ts1 = sub["ts_sec"].to_numpy()[bits == 1]
     sk.bulk_add_ones(ts1)
@@ -46,65 +54,6 @@ OUTPUT_SCHEMA = (
 )
 
 
-def make_dgim_update_fn(size_sec: int, mode: str = MODE_JAVA, evict: bool = False):
-    """Build the applyInPandasWithState update function (importable at
-    module scope so cloudpickle ships only the closure config).
-
-    With ``evict=True`` (requires a watermark + EventTimeTimeout) the
-    state for a window is dropped once the event-time watermark passes
-    its end: per-key state is O(log² N) by the sketch, and eviction
-    makes TOTAL state O(open windows) instead of O(all windows ever) —
-    the difference between bounded and unbounded state at 100 TB."""
-
-    def update(
-        key: Tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state,
-    ) -> Iterator[pd.DataFrame]:
-        if evict and state.hasTimedOut:
-            # watermark passed window end: final value was already
-            # emitted in update mode; just drop the state
-            state.remove()
-            return
-        if state.exists:
-            (flat, ones, nrows) = state.get
-            sk = DGIM.from_flat(size_sec, list(flat), mode=mode)
-        else:
-            sk, ones, nrows = DGIM(size_sec, mode=mode), 0, 0
-        # sort ONCE across the whole group iterator: a key's batch
-        # rows can span multiple Arrow chunks, and per-chunk sorting
-        # would feed the (order-sensitive) sketch out of time order
-        frames = [pdf for pdf in pdfs]
-        sub = (
-            pd.concat(frames).sort_values("ts_sec", kind="mergesort")
-            if frames
-            else pd.DataFrame({"bit": [], "ts_sec": []})
-        )
-        ones += _bulk_update(sk, sub)
-        nrows += len(sub)
-        state.update((sk.to_flat(), ones, nrows))
-        # The grouping key arrives as a NAIVE datetime in the Spark
-        # session timezone (UTC per session.py).  Derive BOTH the
-        # timeout epoch and the window label from the same explicit
-        # naive-as-UTC reading — `.timestamp()` on a naive datetime
-        # would instead apply the HOST timezone, shifting eviction by
-        # the UTC offset on non-UTC hosts.
-        we_utc = key[0].replace(tzinfo=timezone.utc)
-        if evict:
-            # drop state once the watermark reaches the window end
-            state.setTimeoutTimestamp(int(we_utc.timestamp() * 1000))
-        yield pd.DataFrame(
-            {
-                "window_end": [we_utc.strftime("%Y-%m-%d %H:%M:%S")],
-                "count_estimate": [sk.estimate()],
-                "exact_count": [ones],
-                "n_rows": [nrows],
-            }
-        )
-
-    return update
-
-
 def tumble_dgim_stream(
     parsed,
     size_sec: int = 60,
@@ -113,30 +62,58 @@ def tumble_dgim_stream(
 ):
     """Update-mode streaming DGIM per tumbling window (the reference's
     Java tumbling + PyFlink jobs).  Input must be ``parse_traffic``
-    output (bit, ts, ts_sec).
+    output (bit, ts, ts_sec).  Output: ``window_end, count_estimate,
+    exact_count, n_rows``, one row per window updated in a batch.
 
-    With ``watermark`` set, window state is EVICTED once the watermark
-    passes the window end (EventTimeTimeout) — total state bounded by
-    open windows."""
-    from pyspark.sql import functions as F
-
-    evict = watermark is not None
-    src = parsed.withWatermark("ts", watermark) if evict else parsed
-    # keep the watermarked ts column itself: EventTimeTimeout requires
-    # the event-time attribute to reach the stateful operator
-    extra = ("ts",) if evict else ()
-    keyed = src.select(
-        F.window("ts", f"{size_sec} seconds").getItem("end").alias("we"),
-        "bit",
-        "ts_sec",
-        *extra,
+    Late data: with ``watermark`` set, a window's state is evicted once
+    the watermark reaches its end, and a row is dropped (counted in
+    ``numRowsDroppedByWatermark``) only when its window's end is at or
+    below the watermark.  A row older than the watermark whose window
+    is still open is counted.  Without a watermark nothing is evicted
+    or dropped."""
+    return jobs.with_dgim_estimate(
+        jobs.tumble_exact_stream(parsed, size_sec, watermark), mode
     )
-    return keyed.groupBy("we").applyInPandasWithState(
-        make_dgim_update_fn(size_sec, mode, evict=evict),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA + ", ones bigint, nrows bigint",
-        outputMode="update",
-        timeoutConf="EventTimeTimeout" if evict else "NoTimeout",
+
+
+def hop_dgim_stream(
+    parsed,
+    size_sec: int = 60,
+    slide_sec: int = 10,
+    mode: str = MODE_JAVA,
+    watermark: str | None = None,
+):
+    """Update-mode streaming DGIM per hopping window — the reference's
+    sliding job (``SlidingWindowStreamingJob.java:92-111``) as a
+    stateful stream keyed by (window_start, window_end).  Each record
+    updates size/slide windows.  Late data follows the tumbling rule
+    (:func:`tumble_dgim_stream`), window by window."""
+    return jobs.with_dgim_estimate(
+        jobs.hop_exact_stream(parsed, size_sec, slide_sec, watermark), mode
+    )
+
+
+def cumulate_dgim_stream(
+    parsed,
+    max_size_sec: int = 60,
+    step_sec: int = 10,
+    mode: str = MODE_JAVA,
+    watermark: str | None = None,
+):
+    """Update-mode streaming DGIM per CUMULATE window — completes the
+    streaming DGIM family (tumble / hop / cumulate).  Spark has no
+    CUMULATE TVF, so each record explodes into the (span_start, end)
+    pairs of the cumulative windows that cover it (the same end math
+    as the batch operator), aggregated by ``jobs.cumulate_exact_stream``.
+    A cumulative window spans at most ``max_size_sec``, the sketch
+    horizon, so its estimate is the closed form of its 1-bit count.
+    With ``watermark`` set (any interval), the watermark moves to
+    the window end with ``max_size_sec`` more delay, as in the exact
+    twin; a window's state evicts, and later rows for it drop, once
+    that watermark reaches the window's end."""
+    return jobs.with_dgim_estimate(
+        jobs.cumulate_exact_stream(parsed, max_size_sec, step_sec, watermark),
+        mode,
     )
 
 
@@ -454,8 +431,8 @@ class tws_state_store_conf:
 
 class DGIMProcessor(StatefulProcessor):
     """The ``transformWithStateInPandas`` StatefulProcessor for the
-    incremental tumbling DGIM (typed ValueState handle instead of
-    applyInPandasWithState's single state tuple).  Defined at module
+    incremental tumbling DGIM: the bucket list in a typed ValueState,
+    one per window end.  Defined at module
     level so tests can construct it and drive init/handleInputRows
     directly with a fake state handle — the full state round-trip
     (from_flat/to_flat, multi-batch accumulation, output frame) is
@@ -478,7 +455,9 @@ class DGIMProcessor(StatefulProcessor):
             sk = DGIM.from_flat(self._size_sec, list(flat), mode=self._mode)
         else:
             sk, ones, nrows = DGIM(self._size_sec, mode=self._mode), 0, 0
-        # same cross-chunk sort discipline as make_dgim_update_fn
+        # sort ONCE across the whole group iterator: a key's batch
+        # rows can span multiple Arrow chunks, and bulk_add_ones
+        # needs them in time order
         frames = [pdf for pdf in rows]
         sub = (
             pd.concat(frames).sort_values("ts_sec", kind="mergesort")
@@ -505,9 +484,8 @@ class EvictingDGIMProcessor(StatefulProcessor):
     """Tumbling DGIM on TWS with EVENT-TIME TIMERS (r10): every
     update re-registers a timer at the window end, and
     ``handleExpiredTimer`` drops the window's state once the
-    watermark passes — the TWS-native form of the
-    applyInPandasWithState eviction path (``EventTimeTimeout``),
-    making TOTAL state O(open windows).  The final value was already
+    watermark passes — the TWS form of the native stream's
+    watermark eviction, making TOTAL state O(open windows).  The final value was already
     emitted in update mode, so expiry yields nothing."""
 
     def __init__(self, size_sec: int, mode: str = MODE_JAVA) -> None:
@@ -535,8 +513,10 @@ class EvictingDGIMProcessor(StatefulProcessor):
         ones += _bulk_update(sk, sub)
         nrows += len(sub)
         self._st.update((sk.to_flat(), ones, nrows))
-        # naive-as-UTC key reading (see make_dgim_update_fn): drop
-        # this window's state once the watermark reaches its end
+        # The grouping key arrives as a NAIVE datetime in the session
+        # timezone (UTC per session.py); read it explicitly as UTC,
+        # since `.timestamp()` on a naive datetime applies the HOST
+        # timezone.  Drop the state once the watermark reaches it.
         we_utc = key[0].replace(tzinfo=timezone.utc)
         self._handle.registerTimer(int(we_utc.timestamp() * 1000))
         yield pd.DataFrame(
@@ -637,8 +617,8 @@ def hop_dgim_stream_tws(
 ):
     """Sliding-window DGIM on the real ``transformWithStateInPandas``
     runtime: the native ``window(ts, size, slide)`` generator fans
-    each row to its covering windows (exactly as the
-    applyInPandasWithState twin :func:`hop_dgim_stream`) and the
+    each row to its covering windows (exactly as the native
+    :func:`hop_dgim_stream`) and the
     composite (window_start, window_end) key addresses one sketch per
     window instance — exercising multi-column TWS grouping keys.
     Requirements as :func:`tumble_dgim_stream_tws` (RocksDB provider
@@ -669,9 +649,8 @@ def hop_dgim_stream_tws(
 
 def tumble_dgim_stream_tws(parsed, size_sec: int = 60, mode: str = MODE_JAVA):
     """Same incremental tumbling DGIM as :func:`tumble_dgim_stream`,
-    on the current-generation ``transformWithStateInPandas`` API.
-    Kept alongside the applyInPandasWithState path so both stateful
-    APIs stay exercised; outputs are tested identical.
+    on the current-generation ``transformWithStateInPandas`` API, with
+    the real bucket list as state; outputs are tested identical.
 
     Runtime requirements (both satisfied in CI since r10, so the
     end-to-end branch of tests/test_streaming.py actually executes):
@@ -706,152 +685,6 @@ HOP_OUTPUT_SCHEMA = (
     "window_start string, window_end string, "
     "count_estimate bigint, exact_count bigint, n_rows bigint"
 )
-
-
-def make_hop_dgim_update_fn(
-    size_sec: int, mode: str = MODE_JAVA, evict: bool = False
-):
-    """Like :func:`make_dgim_update_fn` but keyed by (window_start,
-    window_end) — the composite upsert key of the reference's sliding
-    job (``SlidingWindowStreamingJob.java:72-74``)."""
-
-    def update(key, pdfs, state):
-        if evict and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            (flat, ones, nrows) = state.get
-            sk = DGIM.from_flat(size_sec, list(flat), mode=mode)
-        else:
-            sk, ones, nrows = DGIM(size_sec, mode=mode), 0, 0
-        # sort ONCE across the whole group iterator: a key's batch
-        # rows can span multiple Arrow chunks, and per-chunk sorting
-        # would feed the (order-sensitive) sketch out of time order
-        frames = [pdf for pdf in pdfs]
-        sub = (
-            pd.concat(frames).sort_values("ts_sec", kind="mergesort")
-            if frames
-            else pd.DataFrame({"bit": [], "ts_sec": []})
-        )
-        ones += _bulk_update(sk, sub)
-        nrows += len(sub)
-        state.update((sk.to_flat(), ones, nrows))
-        # Same naive-as-UTC reading as the tumble twin above:
-        # `.timestamp()` on the naive key would apply the HOST
-        # timezone and shift eviction by the UTC offset.
-        we_utc = key[1].replace(tzinfo=timezone.utc)
-        if evict:
-            state.setTimeoutTimestamp(int(we_utc.timestamp() * 1000))
-        yield pd.DataFrame(
-            {
-                "window_start": [key[0].strftime("%Y-%m-%d %H:%M:%S")],
-                "window_end": [key[1].strftime("%Y-%m-%d %H:%M:%S")],
-                "count_estimate": [sk.estimate()],
-                "exact_count": [ones],
-                "n_rows": [nrows],
-            }
-        )
-
-    return update
-
-
-def cumulate_dgim_stream(
-    parsed,
-    max_size_sec: int = 60,
-    step_sec: int = 10,
-    mode: str = MODE_JAVA,
-    watermark: str | None = None,
-):
-    """Update-mode streaming DGIM per CUMULATE window — completes the
-    streaming DGIM family (tumble / hop / cumulate).  Spark has no
-    CUMULATE TVF, so each record explodes map-side into the
-    (span_start, end) pairs of the cumulative windows that cover it
-    (≤ span/step slots — the same end math as the batch operator and
-    the cumulate window join), and the state is keyed by that pair
-    with the SAME update function as the hop job: one DGIM sketch per
-    open cumulative window, O(log² N) state per key.  With
-    ``watermark`` set, a window's state evicts once the watermark
-    passes its end."""
-    from pyspark.sql import functions as F
-
-    evict = watermark is not None
-    src = parsed.withWatermark("ts", watermark) if evict else parsed
-    extra = ("ts",) if evict else ()
-    size_us = int(max_size_sec) * 1_000_000
-    step_us = int(step_sec) * 1_000_000
-    base = src.select(
-        F.expr(f"unix_micros(ts) div {size_us} * {size_us}").alias(
-            "_ws_us"
-        ),
-        F.expr("unix_micros(ts)").alias("_us"),
-        "bit",
-        "ts_sec",
-        *extra,
-    )
-    ends = F.sequence(
-        F.expr(f"_ws_us + ((_us - _ws_us) div {step_us} + 1) * {step_us}"),
-        F.expr(f"_ws_us + {size_us}"),
-        F.lit(step_us).cast("bigint"),
-    )
-    keyed = base.select(
-        "_ws_us",
-        F.explode(ends).alias("_we_us"),
-        "bit",
-        "ts_sec",
-        *extra,
-    ).select(
-        F.timestamp_micros(F.col("_ws_us")).alias("ws"),
-        F.timestamp_micros(F.col("_we_us")).alias("we"),
-        "bit",
-        "ts_sec",
-        *extra,
-    )
-    return keyed.groupBy("ws", "we").applyInPandasWithState(
-        make_hop_dgim_update_fn(max_size_sec, mode, evict=evict),
-        outputStructType=HOP_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA + ", ones bigint, nrows bigint",
-        outputMode="update",
-        timeoutConf="EventTimeTimeout" if evict else "NoTimeout",
-    )
-
-
-def hop_dgim_stream(
-    parsed,
-    size_sec: int = 60,
-    slide_sec: int = 10,
-    mode: str = MODE_JAVA,
-    watermark: str | None = None,
-):
-    """Update-mode streaming DGIM per hopping window — the reference's
-    sliding job (``SlidingWindowStreamingJob.java:92-111``) as a
-    stateful stream.  Each record updates size/slide window states;
-    state per key stays O(log² N).  With ``watermark`` set, a
-    window's state is evicted once the watermark passes its end
-    (same EventTimeTimeout pattern as the tumbling job)."""
-    from pyspark.sql import functions as F
-
-    evict = watermark is not None
-    src = parsed.withWatermark("ts", watermark) if evict else parsed
-    extra = ("ts",) if evict else ()
-    keyed = src.select(
-        F.window("ts", f"{size_sec} seconds", f"{slide_sec} seconds").alias("w"),
-        "bit",
-        "ts_sec",
-        *extra,
-    ).select(
-        F.col("w.start").alias("ws"),
-        F.col("w.end").alias("we"),
-        "bit",
-        "ts_sec",
-        *extra,
-    )
-    return keyed.groupBy("ws", "we").applyInPandasWithState(
-        make_hop_dgim_update_fn(size_sec, mode, evict=evict),
-        outputStructType=HOP_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA + ", ones bigint, nrows bigint",
-        outputMode="update",
-        timeoutConf="EventTimeTimeout" if evict else "NoTimeout",
-    )
 
 
 class SessionDGIMProcessor(StatefulProcessor):

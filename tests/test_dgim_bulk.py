@@ -14,6 +14,8 @@ No Spark dependency.
 
 import random
 
+import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -163,3 +165,19 @@ def test_bulk_empty_batch_is_noop():
     before = _state(sk)
     sk.bulk_add_ones([])
     assert _state(sk) == before
+
+
+def test_bulk_rejects_unsorted_batch():
+    # unsorted input used to build wrong buckets without complaint
+    # (for [50, 5, 20] in a 10 s window the closed form kept 5 and 20,
+    # which sequential add expires behind 50); now it is refused and
+    # leaves the sketch untouched
+    sk = DGIM(10)
+    with pytest.raises(ValueError, match="ascending"):
+        sk.bulk_add_ones([50, 5, 20])
+    assert sk.buckets == [] and sk.latest_ts == 0
+    seq = DGIM(10)
+    for t in (5, 20, 50):
+        seq.add(t)
+    sk.bulk_add_ones(np.array([5, 20, 50]))
+    assert _state(sk) == _state(seq)

@@ -487,6 +487,23 @@ def test_stream_cumulate_update_matches_batch(spark, fixture_dir, batch_parsed):
     assert final == expect
 
 
+def test_cumulate_stream_watermark_adds_span_to_any_interval(spark, fixture_dir):
+    """The cumulate streams watermark the window end with
+    ``max_size_sec`` more delay; that must hold for any interval
+    string, not only ``"<n> seconds"`` (``"1 minute"`` was read as 1 s,
+    giving 61 s instead of 2 minutes)."""
+    stream = J.parse_traffic(J.file_traffic_stream(spark, fixture_dir))
+    for wm, delay in (("10 seconds", "1 minutes 10 seconds"), ("1 minute", "2 minutes")):
+        plan = (
+            J.cumulate_exact_stream(stream, 60, 10, watermark=wm)
+            ._jdf.queryExecution()
+            .analyzed()
+            .toString()
+        )
+        line = next(x for x in plan.splitlines() if "EventTimeWatermark" in x)
+        assert "we_ts" in line and line.rstrip().endswith(f", {delay}"), line
+
+
 def test_sql_streaming_tumble_matches_batch(spark, fixture_dir, batch_parsed):
     """The reference's SQL-submission UX on a STREAM: one SQL
     statement over a registered stream view; final updates equal the
@@ -718,58 +735,57 @@ def test_stateful_cumulate_dgim_matches_batch_replay(
     assert len(final) > 0
 
 
-def test_hop_dgim_eviction_timeout_is_host_tz_independent():
-    """ADVICE r8: the hop/cumulate update fn must read the NAIVE
-    window-end key as UTC when computing the state-eviction timeout.
-    Pure-Python pin: run the update fn under a non-UTC host TZ and
-    assert the timeout epoch equals the UTC reading (a naive
-    ``.timestamp()`` would shift it by the host offset)."""
-    import datetime as _dt
-    import os
-    import time as _time
+def test_stateful_dgim_late_rows_follow_window_end(spark, tmp_path):
+    """Native window aggregation drops a late row only once its
+    WINDOW's end is at or below the watermark.  After a first file
+    whose newest event is at 00:02:15 the watermark (10 s) is 00:02:05:
+    a row at 00:02:02 is older than the watermark but its window
+    [00:02, 00:03) is still open, so it is counted; a row at 00:01:40
+    belongs to [00:01, 00:02), already evicted, so it is dropped and
+    shows up in numRowsDroppedByWatermark."""
+    import json as _json
 
-    import pandas as _pd
+    src = tmp_path / "src"
+    src.mkdir()
 
-    from flink_window_dgim_traffic_spark.streaming.stateful_dgim import (
-        make_hop_dgim_update_fn,
-    )
+    def write(name, rows):
+        with open(src / name, "w") as fh:
+            for bit, hms in rows:
+                ts = f"2024-05-01T00:{hms}.000000"
+                fh.write(_json.dumps({"value": str(bit), "timestamp": ts}) + "\n")
 
-    class _CaptureState:
-        exists = False
-        hasTimedOut = False
+    out = []
 
-        def __init__(self):
-            self.timeout_ms = None
-
-        def update(self, v):
-            pass
-
-        def setTimeoutTimestamp(self, ms):
-            self.timeout_ms = ms
-
-    we = _dt.datetime(2024, 1, 1, 0, 1, 0)  # naive, session-tz=UTC
-    expect_ms = int(
-        we.replace(tzinfo=_dt.timezone.utc).timestamp() * 1000
-    )
-    old_tz = os.environ.get("TZ")
-    os.environ["TZ"] = "America/New_York"  # UTC-5: a naive read is 5h off
-    _time.tzset()
-    try:
-        fn = make_hop_dgim_update_fn(60, evict=True)
-        st = _CaptureState()
-        batch = _pd.DataFrame({"bit": [1], "ts_sec": [1704067200]})
-        list(fn((_dt.datetime(2024, 1, 1, 0, 0, 0), we), iter([batch]), st))
-        assert st.timeout_ms == expect_ms, (
-            st.timeout_ms,
-            expect_ms,
-            "eviction timestamp shifted by the host TZ offset",
+    def run_once():
+        stream = J.parse_traffic(J.file_traffic_stream(spark, str(src)))
+        q = (
+            tumble_dgim_stream(stream, 60, watermark="10 seconds")
+            .writeStream.outputMode("update")
+            .foreachBatch(lambda df, _id: out.extend(df.collect()))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
-    finally:
-        if old_tz is None:
-            del os.environ["TZ"]
-        else:
-            os.environ["TZ"] = old_tz
-        _time.tzset()
+        q.awaitTermination()
+        return q.recentProgress
+
+    write("a.json", [(1, "00:30"), (1, "01:10"), (1, "01:50"), (1, "02:15")])
+    run_once()
+    write("b.json", [(1, "02:02"), (1, "01:40")])
+    progress = run_once()
+
+    final = {}
+    for r in out:
+        final[r["window_end"]] = (r["count_estimate"], r["exact_count"], r["n_rows"])
+    assert final == {
+        "2024-05-01 00:01:00": (1, 1, 1),
+        "2024-05-01 00:02:00": (2, 2, 2),
+        "2024-05-01 00:03:00": (2, 2, 2),
+    }
+    dropped = sum(
+        o.numRowsDroppedByWatermark for p in progress for o in p.stateOperators
+    )
+    assert dropped == 1
 
 
 def test_tws_hop_dgim_matches_batch_replay(spark, fixture_dir, batch_parsed):

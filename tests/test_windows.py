@@ -56,6 +56,56 @@ def test_tumble_dgim_bound_and_exact_twin(events, events_pdf):
         assert exact / 2 - 1 <= r["count_estimate"] <= 1.5 * exact + 1
 
 
+def test_dgim_estimate_col_equals_closed_form(spark):
+    """The native closed-form Column equals ``dgim.count_estimate_closed``
+    in both modes, in one ``spark.range`` job, for n = 0..5000, every
+    2^k - 1, 2^k and 2^k + 1 with k <= 61 (where a floating-point
+    log2 would be off by one), and NULL, which gives 0."""
+    from pyspark.sql import functions as F
+
+    from flink_window_dgim_traffic_spark.dgim import (
+        MODE_JAVA,
+        MODE_PYFLINK,
+        count_estimate_closed,
+    )
+
+    dense, edges = 5001, 62 * 3
+    i = F.col("id")
+    e = i - dense
+    n = (
+        F.when(i < dense, i)
+        .when(
+            i < dense + edges,
+            F.call_function(
+                "shiftleft", F.lit(1).cast("bigint"), (e / 3).cast("int")
+            )
+            + F.pmod(e, F.lit(3))
+            - 1,
+        )
+        .cast("bigint")
+    )  # the last id is NULL
+    rows = (
+        spark.range(dense + edges + 1)
+        .select(n.alias("n"))
+        .select(
+            "n",
+            W.dgim_estimate_col("n", MODE_JAVA).alias("java"),
+            W.dgim_estimate_col(F.col("n"), MODE_PYFLINK).alias("pyflink"),
+        )
+        .collect()
+    )
+    assert len(rows) == dense + edges + 1
+    seen = {r["n"] for r in rows}
+    assert set(range(dense)) <= seen and None in seen
+    assert {(1 << 61) - 1, 1 << 61, (1 << 61) + 1} <= seen
+    for r in rows:
+        if r["n"] is None:
+            assert (r["java"], r["pyflink"]) == (0, 0)
+            continue
+        assert r["java"] == count_estimate_closed(r["n"], MODE_JAVA), r
+        assert r["pyflink"] == count_estimate_closed(r["n"], MODE_PYFLINK), r
+
+
 def test_dgim_paths_agree(events):
     """applyInPandas, collect_list+UDF, and two-phase replay the same
     per-window stream; single-partition replay paths must agree
