@@ -1,22 +1,18 @@
 # Convenience targets; all knobs are env vars with the same defaults
 # the driver uses.
 
-SF_DIR ?= /root/testdata/sf0.1
 ORACLE_SF ?= /root/testdata/sf0.01
 KAFKA_BOOTSTRAP ?= localhost:9092
 W ?= stream
 SEED ?= 1
 
-.PHONY: test oracle bench perfbench kafka-live
+.PHONY: test oracle perfbench kafka-live
 
 test:
 	python -m pytest tests/ -x -q
 
 oracle:
 	python tools/check_oracle.py --sf $(ORACLE_SF)
-
-bench:
-	SPARK_GRAFT_SF_DIR=$(SF_DIR) python bench.py
 
 # The pipeline benchmark (perfbench/README.md): one untraced run of
 # workload W (stream or backfill_history), then the benchmark's tests.

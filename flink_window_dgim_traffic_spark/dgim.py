@@ -129,7 +129,7 @@ class DGIM:
 
     def bulk_add_ones(self, ts_sorted: Sequence[int]) -> None:
         """Add many 1-bits at once — the closed-form batch path for
-        the TWS processors, the replay operators and two-phase
+        the TWS ``DGIMProcessor``, the replay operators and two-phase
         phase 1, bit-identical to calling :meth:`add` per element
         (property-tested in tests/test_dgim_bulk.py).
 

@@ -916,16 +916,10 @@ def _stream_tumble_dgim_tws(s: SparkSession, d: str) -> DataFrame:
     lo, hi = parsed.agg(F.min("ts_sec"), F.max("ts_sec")).collect()[0]
     span = (hi - lo) // 3 + 1
     def _write_slice(i: int) -> None:
-        # r12: no orderBy — the processor sorts each batch by ts_sec
-        # itself (handleInputRows' mergesort), and adds of equal-ts
-        # one-bits are order-invariant in the DGIM bucket algebra, so
-        # the global sort per slice bought nothing (output pinned
-        # identical by the oracle + TWS equality tests).
-        # r13: repartition(1), not coalesce(1) — coalesce folded the
-        # whole filtered scan into the single write task (the r12
-        # build_ivf_index finding); and the three independent slice
-        # writes are submitted concurrently (guide §2.6 — the same
-        # overlap the IVM staged writes measured at ~1.6×).
+        # No orderBy: the processor sorts each batch by ts_sec itself.
+        # repartition(1), not coalesce(1), which would fold the whole
+        # filtered scan into the single write task; the three slice
+        # writes are independent, so they run concurrently.
         parsed.filter(
             (F.col("ts_sec") >= lo + i * span)
             & (F.col("ts_sec") < lo + (i + 1) * span)

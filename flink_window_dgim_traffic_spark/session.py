@@ -8,6 +8,8 @@ so event-time arithmetic matches the DuckDB oracle.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -16,6 +18,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 _SHIPPED: set = set()
+
+
+def _remove_quietly(path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(path)
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -36,6 +43,8 @@ def ship_package(spark: SparkSession) -> None:
         prefix="flink_window_dgim_traffic_spark_", suffix=".zip"
     )
     os.close(fd)
+    # executors fetch the zip lazily, so it lives until interpreter exit
+    atexit.register(_remove_quietly, zpath)
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _, files in os.walk(pkg_dir):
             for f in files:

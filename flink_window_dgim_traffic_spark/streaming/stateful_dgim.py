@@ -12,41 +12,24 @@ projection, in update mode.  They are the exact twins of
 ``jobs.*_exact_stream`` plus that projection; no Python runs per
 micro-batch.
 
-The ``transformWithStateInPandas`` processors below keep the real
-bucket list in the state store (O(log² N) per window, updated with
-``DGIM.bulk_add_ones``): they demonstrate the sketch on the
-current-generation stateful API and are equality-pinned against the
-native streams and batch replay in tests.
+One ``transformWithStateInPandas`` stream remains beside them:
+:func:`tumble_dgim_stream_tws`, whose :class:`DGIMProcessor` keeps the
+real bucket list in the state store (O(log² N) per window, updated
+with ``DGIM.bulk_add_ones``).  It is the one place the sketch itself
+lives in streaming state, and it is tested equal to batch replay.
+The TWS runtime staging below (protobuf, RocksDB provider) also
+serves the heavy-hitters and funnel processors.
 """
 
 from __future__ import annotations
 
 import os
-from datetime import timezone
 
 import pandas as pd
 from pyspark.sql.streaming import StatefulProcessor
 
-from flink_window_dgim_traffic_spark.dgim import (
-    DGIM,
-    MODE_JAVA,
-    count_estimate_closed,
-)
+from flink_window_dgim_traffic_spark.dgim import DGIM, MODE_JAVA
 from flink_window_dgim_traffic_spark.streaming import jobs
-
-
-def _bulk_update(sk: DGIM, sub: pd.DataFrame) -> int:
-    """Feed one ts-sorted batch into the sketch and return the number
-    of 1-bits added.  Uses the closed-form zeroless-binary bulk insert
-    (``DGIM.bulk_add_ones`` — O(log n) per batch instead of a
-    per-event Python loop), which itself falls back to exact
-    sequential adds whenever its preconditions fail (a batch older
-    than the state, in-window expiry).  Bit-identical to a per-event
-    loop — property-pinned in tests/test_dgim_bulk.py."""
-    bits = sub["bit"].to_numpy()
-    ts1 = sub["ts_sec"].to_numpy()[bits == 1]
-    sk.bulk_add_ones(ts1)
-    return len(ts1)
 
 
 OUTPUT_SCHEMA = (
@@ -231,6 +214,7 @@ def _build_portable_protobuf(src_dir: str) -> tuple[str, str]:
     ``_PROTOBUF_MAX_MINOR_SKEW`` (same major); a larger skew raises
     ``RuntimeError`` here so it surfaces as a clear version error,
     never a silent wire misparse."""
+    import atexit
     import shutil
     import tempfile
     import zipfile
@@ -251,6 +235,9 @@ def _build_portable_protobuf(src_dir: str) -> tuple[str, str]:
             )
 
     stage = tempfile.mkdtemp(prefix="spark_graft_tws_pb_")
+    # removed at interpreter exit, not earlier: workers and the TWS
+    # driver worker import from it for as long as the process lives
+    atexit.register(shutil.rmtree, stage, ignore_errors=True)
     dst = os.path.join(stage, "google", "protobuf")
     shutil.copytree(os.path.join(src_dir, "google", "protobuf"), dst)
     with open(os.path.join(dst, "runtime_version.py"), "a") as fh:
@@ -464,7 +451,9 @@ class DGIMProcessor(StatefulProcessor):
             if frames
             else pd.DataFrame({"bit": [], "ts_sec": []})
         )
-        ones += _bulk_update(sk, sub)
+        ts1 = sub["ts_sec"].to_numpy()[sub["bit"].to_numpy() == 1]
+        sk.bulk_add_ones(ts1)
+        ones += len(ts1)
         nrows += len(sub)
         self._st.update((sk.to_flat(), ones, nrows))
         yield pd.DataFrame(
@@ -478,173 +467,6 @@ class DGIMProcessor(StatefulProcessor):
 
     def close(self) -> None:
         pass
-
-
-class EvictingDGIMProcessor(StatefulProcessor):
-    """Tumbling DGIM on TWS with EVENT-TIME TIMERS (r10): every
-    update re-registers a timer at the window end, and
-    ``handleExpiredTimer`` drops the window's state once the
-    watermark passes — the TWS form of the native stream's
-    watermark eviction, making TOTAL state O(open windows).  The final value was already
-    emitted in update mode, so expiry yields nothing."""
-
-    def __init__(self, size_sec: int, mode: str = MODE_JAVA) -> None:
-        self._size_sec = size_sec
-        self._mode = mode
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._st = handle.getValueState(
-            "sketch", "flat array<bigint>, ones bigint, nrows bigint"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self._st.exists():
-            flat, ones, nrows = self._st.get()
-            sk = DGIM.from_flat(self._size_sec, list(flat), mode=self._mode)
-        else:
-            sk, ones, nrows = DGIM(self._size_sec, mode=self._mode), 0, 0
-        frames = [pdf for pdf in rows]
-        sub = (
-            pd.concat(frames).sort_values("ts_sec", kind="mergesort")
-            if frames
-            else pd.DataFrame({"bit": [], "ts_sec": []})
-        )
-        ones += _bulk_update(sk, sub)
-        nrows += len(sub)
-        self._st.update((sk.to_flat(), ones, nrows))
-        # The grouping key arrives as a NAIVE datetime in the session
-        # timezone (UTC per session.py); read it explicitly as UTC,
-        # since `.timestamp()` on a naive datetime applies the HOST
-        # timezone.  Drop the state once the watermark reaches it.
-        we_utc = key[0].replace(tzinfo=timezone.utc)
-        self._handle.registerTimer(int(we_utc.timestamp() * 1000))
-        yield pd.DataFrame(
-            {
-                "window_end": [we_utc.strftime("%Y-%m-%d %H:%M:%S")],
-                "count_estimate": [sk.estimate()],
-                "exact_count": [ones],
-                "n_rows": [nrows],
-            }
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        self._st.clear()
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def tumble_dgim_stream_tws_evict(
-    parsed,
-    size_sec: int = 60,
-    mode: str = MODE_JAVA,
-    watermark: str = "0 seconds",
-):
-    """Update-mode TWS tumbling DGIM WITH state eviction: event-time
-    ``timeMode`` + per-window timers at the window end.  The input
-    must carry a watermark (the TWS event-time clock); same output
-    contract as :func:`tumble_dgim_stream_tws`, with bounded state —
-    equality to batch replay AND the state bound are pinned in
-    tests."""
-    from pyspark.sql import functions as F
-
-    ship_tws_runtime(parsed.sparkSession)
-    src = parsed.withWatermark("ts", watermark)
-    keyed = src.select(
-        F.window("ts", f"{size_sec} seconds").getItem("end").alias("we"),
-        "bit",
-        "ts_sec",
-        "ts",
-    )
-    return keyed.groupBy("we").transformWithStateInPandas(
-        statefulProcessor=EvictingDGIMProcessor(size_sec, mode),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="EventTime",
-    )
-
-
-class HopDGIMProcessor(StatefulProcessor):
-    """TWS StatefulProcessor for the HOP (sliding) DGIM — keyed by
-    the COMPOSITE (window_start, window_end) tuple, the reference's
-    sliding-job upsert key (``SlidingWindowStreamingJob.java:72-74``).
-    Same sketch state contract as :class:`DGIMProcessor`; exercises
-    multi-column grouping keys on the real TWS runtime (r10 — the
-    second window kind through transformWithStateInPandas)."""
-
-    def __init__(self, size_sec: int, mode: str = MODE_JAVA) -> None:
-        self._size_sec = size_sec
-        self._mode = mode
-
-    def init(self, handle) -> None:
-        self._st = handle.getValueState(
-            "sketch", "flat array<bigint>, ones bigint, nrows bigint"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self._st.exists():
-            flat, ones, nrows = self._st.get()
-            sk = DGIM.from_flat(self._size_sec, list(flat), mode=self._mode)
-        else:
-            sk, ones, nrows = DGIM(self._size_sec, mode=self._mode), 0, 0
-        frames = [pdf for pdf in rows]
-        sub = (
-            pd.concat(frames).sort_values("ts_sec", kind="mergesort")
-            if frames
-            else pd.DataFrame({"bit": [], "ts_sec": []})
-        )
-        ones += _bulk_update(sk, sub)
-        nrows += len(sub)
-        self._st.update((sk.to_flat(), ones, nrows))
-        yield pd.DataFrame(
-            {
-                "window_start": [key[0].strftime("%Y-%m-%d %H:%M:%S")],
-                "window_end": [key[1].strftime("%Y-%m-%d %H:%M:%S")],
-                "count_estimate": [sk.estimate()],
-                "exact_count": [ones],
-                "n_rows": [nrows],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def hop_dgim_stream_tws(
-    parsed, size_sec: int = 60, slide_sec: int = 10, mode: str = MODE_JAVA
-):
-    """Sliding-window DGIM on the real ``transformWithStateInPandas``
-    runtime: the native ``window(ts, size, slide)`` generator fans
-    each row to its covering windows (exactly as the native
-    :func:`hop_dgim_stream`) and the
-    composite (window_start, window_end) key addresses one sketch per
-    window instance — exercising multi-column TWS grouping keys.
-    Requirements as :func:`tumble_dgim_stream_tws` (RocksDB provider
-    + protobuf — :func:`ship_tws_runtime` is called automatically);
-    output equals batch replay, pinned in tests."""
-    from pyspark.sql import functions as F
-
-    ship_tws_runtime(parsed.sparkSession)
-    keyed = parsed.select(
-        F.window(
-            "ts", f"{size_sec} seconds", f"{slide_sec} seconds"
-        ).alias("w"),
-        "bit",
-        "ts_sec",
-    ).select(
-        F.col("w.start").alias("ws"),
-        F.col("w.end").alias("we"),
-        "bit",
-        "ts_sec",
-    )
-    return keyed.groupBy("ws", "we").transformWithStateInPandas(
-        statefulProcessor=HopDGIMProcessor(size_sec, mode),
-        outputStructType=HOP_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 def tumble_dgim_stream_tws(parsed, size_sec: int = 60, mode: str = MODE_JAVA):
@@ -678,237 +500,4 @@ def tumble_dgim_stream_tws(parsed, size_sec: int = 60, mode: str = MODE_JAVA):
         outputStructType=OUTPUT_SCHEMA,
         outputMode="Update",
         timeMode="None",
-    )
-
-
-HOP_OUTPUT_SCHEMA = (
-    "window_start string, window_end string, "
-    "count_estimate bigint, exact_count bigint, n_rows bigint"
-)
-
-
-class SessionDGIMProcessor(StatefulProcessor):
-    """TWS StatefulProcessor for SESSION-window DGIM (r11, VERDICT
-    r10 ask #5): the engine-native ``session_window`` aggregation of
-    ``jobs.session_dgim_stream`` re-expressed as explicit per-key
-    session-merge state + event-time timers, so the 4th window kind
-    runs on the current-generation stateful API too.
-
-    State: the OPEN sessions of one key as parallel arrays
-    (start_us, last_us, ones, n).  An event at ``t`` joins a session
-    iff its gap window overlaps the session's
-    (``start − gap < t < last + gap``, strict — an event exactly at
-    ``last + gap`` starts a new session, the engine's boundary rule),
-    and a bridging event merges neighbors.  A timer at the earliest
-    ``last + gap`` closes ripe sessions when the watermark passes:
-    closed sessions emit ``(session_start, session_end_plus_gap,
-    count_estimate = g(ones), exact_count, n_rows)`` — the
-    replay-equivalent closed form (horizon ≥ span, the same
-    equivalence ``windows.session_dgim`` property-tests) — and their
-    state is dropped, so state is bounded by OPEN sessions exactly
-    like the engine operator.  Equality against
-    ``jobs.session_dgim_stream`` is pinned in tests."""
-
-    def __init__(
-        self,
-        gap_sec: int,
-        mode: str = MODE_JAVA,
-        key_name: str = "key",
-    ) -> None:
-        self._gap_us = gap_sec * 1_000_000
-        self._mode = mode
-        self._key_name = key_name
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._st = handle.getValueState(
-            "sessions",
-            "starts array<bigint>, lasts array<bigint>, "
-            "oness array<bigint>, ns array<bigint>",
-        )
-
-    def _load(self):
-        if self._st.exists():
-            starts, lasts, oness, ns = self._st.get()
-            return [list(t) for t in zip(starts, lasts, oness, ns)]
-        return []
-
-    def _save(self, sess) -> None:
-        sess.sort()
-        self._st.update(
-            (
-                [s[0] for s in sess],
-                [s[1] for s in sess],
-                [s[2] for s in sess],
-                [s[3] for s in sess],
-            )
-        )
-
-    def _insert(self, sess, t: int, bit: int) -> None:
-        self._insert_span(sess, t, t, bit, 1)
-
-    def _insert_span(
-        self, sess, t0: int, t1: int, ones: int, n: int
-    ) -> None:
-        """Merge a pre-aggregated session span [t0, t1] (``ones``
-        1-bits over ``n`` events) into the sorted session list —
-        the generalization of the r11 single-event insert (a point
-        is a span with t0 == t1).  A span bridges every existing
-        session within the strict gap on either side."""
-        g = self._gap_us
-        lo, hi = None, None
-        for i, s in enumerate(sess):
-            if s[0] - g < t1 and t0 < s[1] + g:
-                if lo is None:
-                    lo = i
-                hi = i
-        if lo is None:
-            sess.append([t0, t1, ones, n])
-            sess.sort()
-            return
-        # fold the span into the first overlapping session, then
-        # merge every session the span bridges
-        tgt = sess[lo]
-        tgt[0] = min(tgt[0], t0)
-        tgt[1] = max(tgt[1], t1)
-        tgt[2] += ones
-        tgt[3] += n
-        for s in sess[lo + 1 : hi + 1]:
-            tgt[0] = min(tgt[0], s[0])
-            tgt[1] = max(tgt[1], s[1])
-            tgt[2] += s[2]
-            tgt[3] += s[3]
-        del sess[lo + 1 : hi + 1]
-
-    def _close_ripe(self, sess, wm_ms: int, key0=None):
-        """Emit and drop sessions whose end passed the watermark.
-
-        ``key0`` is the grouping-key value, emitted as the leading
-        column — matching the engine-native twin (and the other TWS
-        processors, FunnelProcessor/HeavyHittersProcessor), which
-        all emit their keys so sessions from different keys stay
-        distinguishable (ADVICE r11)."""
-        from datetime import datetime, timezone
-
-        g = self._gap_us
-        wm_us = wm_ms * 1000
-        closed = [s for s in sess if s[1] + g <= wm_us]
-        kept = [s for s in sess if s[1] + g > wm_us]
-
-        def fmt(us: int) -> str:
-            return datetime.fromtimestamp(
-                us / 1_000_000, tz=timezone.utc
-            ).strftime("%Y-%m-%d %H:%M:%S")
-
-        frames = []
-        for s in sorted(closed):
-            frames.append(
-                {
-                    self._key_name: key0,
-                    "session_start": fmt(s[0]),
-                    "session_end_plus_gap": fmt(s[1] + g),
-                    "count_estimate": count_estimate_closed(
-                        s[2], mode=self._mode
-                    ),
-                    "exact_count": s[2],
-                    "n_rows": s[3],
-                }
-            )
-        return kept, frames
-
-    def _arm_timer(self, sess, wm_ms: int) -> None:
-        if sess:
-            t_ms = min(s[1] + self._gap_us for s in sess) // 1000 + 1
-            self._handle.registerTimer(max(t_ms, wm_ms + 1))
-
-    def handleInputRows(self, key, rows, timerValues):
-        import numpy as np
-
-        sess = self._load()
-        # pre-sessionize the batch VECTORIZED (r12): sort, break at
-        # gaps, reduceat the per-segment sums — then merge only the
-        # few span summaries into state.  Sessionization is uniquely
-        # determined by the point set, so sub-sessionizing any subset
-        # first and span-merging after yields the same sessions as
-        # the r11 per-event loop (equality with the engine-native
-        # twin stays pinned in tests); this removes the per-event
-        # Python cost that made the TWS twin 2.4x the JVM twin.
-        g = self._gap_us
-        for pdf in rows:
-            ts = pdf["ts_us"].to_numpy(np.int64)
-            bits = pdf["bit"].to_numpy(np.int64)
-            if len(ts) == 0:
-                continue
-            order = np.argsort(ts, kind="stable")
-            ts, bits = ts[order], bits[order]
-            starts = np.concatenate(
-                ([0], np.flatnonzero(np.diff(ts) >= g) + 1)
-            )
-            ones = np.add.reduceat(bits, starts)
-            ends = np.concatenate((starts[1:], [len(ts)]))
-            for st, en, o in zip(starts, ends, ones):
-                self._insert_span(
-                    sess,
-                    int(ts[st]),
-                    int(ts[en - 1]),
-                    int(o),
-                    int(en - st),
-                )
-        wm_ms = timerValues.getCurrentWatermarkInMs()
-        sess, frames = self._close_ripe(sess, wm_ms, key[0])
-        self._save(sess)
-        self._arm_timer(sess, wm_ms)
-        if frames:
-            yield pd.DataFrame(frames)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        sess = self._load()
-        wm_ms = timerValues.getCurrentWatermarkInMs()
-        sess, frames = self._close_ripe(sess, wm_ms, key[0])
-        self._save(sess)
-        self._arm_timer(sess, wm_ms)
-        if frames:
-            yield pd.DataFrame(frames)
-
-    def close(self) -> None:
-        pass
-
-
-SESSION_OUTPUT_SCHEMA = (
-    "session_start string, session_end_plus_gap string, "
-    "count_estimate bigint, exact_count bigint, n_rows bigint"
-)
-
-
-def session_output_schema(key_col: str) -> str:
-    """TWS output schema WITH the grouping key as leading column —
-    the engine-native twin's shape (ADVICE r11)."""
-    return f"{key_col} bigint, " + SESSION_OUTPUT_SCHEMA
-
-
-def session_dgim_stream_tws(
-    parsed,
-    gap_sec: int = 300,
-    watermark: str = "10 seconds",
-    key_col: str = "user_id",
-):
-    """Session-window DGIM on the transformWithStateInPandas runtime:
-    per-``key_col`` session merge + event-time close timers
-    (:class:`SessionDGIMProcessor`).  Emits only CLOSED sessions —
-    the append-mode contract of the engine-native
-    ``jobs.session_dgim_stream`` twin it is equality-pinned against
-    in tests.  RocksDB provider + protobuf required, as every TWS
-    entry point (``ship_tws_runtime`` is called automatically)."""
-    from pyspark.sql import functions as F
-
-    ship_tws_runtime(parsed.sparkSession)
-    cols = [F.col(key_col), F.unix_micros("ts").alias("ts_us"), F.col("ts")]
-    if key_col != "bit":  # when keying BY bit, one column serves both
-        cols.insert(2, F.col("bit"))
-    src = parsed.withWatermark("ts", watermark).select(*cols)
-    return src.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=SessionDGIMProcessor(gap_sec, key_name=key_col),
-        outputStructType=session_output_schema(key_col),
-        outputMode="Update",
-        timeMode="EventTime",
     )

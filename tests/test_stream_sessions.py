@@ -198,58 +198,3 @@ def test_stream_session_dgim_matches_batch(spark, burst_dir):
     assert got.items() <= expect.items()
     burst_got = {k: v for k, v in got.items() if k[0] < BURST_CUTOFF}
     assert len(burst_got) == len(BURSTS)
-
-
-def test_tws_session_dgim_matches_engine_twin(spark, burst_dir):
-    """r11 TWS parity: the SessionDGIMProcessor (explicit session-
-    merge state + event-time close timers on
-    transformWithStateInPandas) must emit exactly the closed sessions
-    the engine-native session_window twin emits, keyed by 'bit'."""
-    from flink_window_dgim_traffic_spark.streaming.stateful_dgim import (
-        session_dgim_stream_tws,
-        tws_available,
-        tws_state_store_conf,
-    )
-
-    if not tws_available():
-        pytest.skip("TWS protobuf runtime unavailable on this host")
-
-    J.run_stream_to_memory(
-        J.session_dgim_stream(
-            _stream(spark, burst_dir), gap_sec=GAP_SEC, key_cols=["bit"]
-        ),
-        "t_sess_dgim_engine",
-    )
-    engine = sorted(
-        (
-            r["bit"],
-            r["session_start"],
-            r["session_end_plus_gap"],
-            r["count_estimate"],
-            r["exact_count"],
-            r["n_rows"],
-        )
-        for r in spark.sql("SELECT * FROM t_sess_dgim_engine").collect()
-    )
-
-    with tws_state_store_conf(spark):
-        q = (
-            session_dgim_stream_tws(
-                _stream(spark, burst_dir), gap_sec=GAP_SEC, key_col="bit"
-            )
-            .writeStream.format("memory")
-            .queryName("t_sess_dgim_tws")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    tws = sorted(
-        tuple(r)
-        for r in spark.sql("SELECT * FROM t_sess_dgim_tws").collect()
-    )
-    # key included on BOTH sides (ADVICE r11): sessions from
-    # different keys must stay distinguishable in TWS output
-    assert tws == engine
-    assert len(tws) >= 2 * len(BURSTS)  # both bit-keys, every burst
-    assert {t[0] for t in tws} == {0, 1}

@@ -788,91 +788,6 @@ def test_stateful_dgim_late_rows_follow_window_end(spark, tmp_path):
     assert dropped == 1
 
 
-def test_tws_hop_dgim_matches_batch_replay(spark, fixture_dir, batch_parsed):
-    """The SECOND window kind on the real transformWithStateInPandas
-    runtime (r10): sliding DGIM with the COMPOSITE (window_start,
-    window_end) grouping key.  Final per-window values must equal the
-    batch hop replay; skips only where the TWS runtime is genuinely
-    unavailable (it runs in CI since r10)."""
-    from flink_window_dgim_traffic_spark.streaming.stateful_dgim import (
-        hop_dgim_stream_tws,
-        tws_available,
-        tws_state_store_conf,
-    )
-
-    if not tws_available():
-        pytest.skip("TWS protobuf runtime unavailable")
-    ev = batch_parsed.withColumn("event_id", F.col("bit").cast("bigint"))
-    expect = {
-        (r["window_start"], r["window_end"]): (
-            r["count_estimate"],
-            r["exact_count"],
-        )
-        for r in W.hop_dgim(ev, 60, 10).collect()
-    }
-    stream = J.parse_traffic(J.file_traffic_stream(spark, fixture_dir))
-    with tws_state_store_conf(spark):
-        J.run_stream_to_memory(
-            hop_dgim_stream_tws(stream, 60, 10), "t_hop_dgim_tws", "update"
-        )
-    rows = spark.sql(
-        """
-        SELECT window_start, window_end,
-               max_by(count_estimate, n_rows) AS count_estimate,
-               max_by(exact_count, n_rows) AS exact_count
-        FROM t_hop_dgim_tws GROUP BY window_start, window_end
-        """
-    ).collect()
-    got = {
-        (r["window_start"], r["window_end"]): (
-            r["count_estimate"],
-            r["exact_count"],
-        )
-        for r in rows
-    }
-    assert got == expect
-
-
-def test_tws_dgim_eviction_matches_and_bounds_state(
-    spark, fixture_dir, batch_parsed
-):
-    """TWS EVENT-TIME TIMERS (r10): the evicting processor's final
-    values equal batch replay AND closed-window state is dropped
-    (numRowsTotal < windows seen) — the TWS-native twin of the
-    applyInPandasWithState EventTimeTimeout eviction test."""
-    from flink_window_dgim_traffic_spark.streaming.stateful_dgim import (
-        tumble_dgim_stream_tws_evict,
-        tws_available,
-        tws_state_store_conf,
-    )
-
-    if not tws_available():
-        pytest.skip("TWS protobuf runtime unavailable")
-    stream = J.parse_traffic(J.file_traffic_stream(spark, fixture_dir))
-    with tws_state_store_conf(spark):
-        q = (
-            tumble_dgim_stream_tws_evict(stream, 60)
-            .writeStream.format("memory")
-            .queryName("t_dgim_tws_evict")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
-    final = {}
-    for r in spark.sql("SELECT * FROM t_dgim_tws_evict").collect():
-        final[r["window_end"]] = (r["count_estimate"], r["exact_count"])
-    ev = batch_parsed.withColumn("event_id", F.col("bit").cast("bigint"))
-    expect = {
-        r["window_end"]: (r["count_estimate"], r["exact_count"])
-        for r in W.tumble_dgim(ev, 60).collect()
-    }
-    assert final == expect
-    # closed windows evicted: fewer state rows than windows seen
-    assert state_rows < len(expect), (state_rows, len(expect))
-
-
 def test_tws_protobuf_version_guard_and_reason():
     """The portable-protobuf shim must refuse to disarm the runtime
     version validator beyond a one-minor skew (a larger skew must be
@@ -944,3 +859,59 @@ def test_tws_pkg_parent_on_pythonpath_even_with_real_protobuf():
     SD.enable_tws_runtime()
     parts = os.environ.get("PYTHONPATH", "").split(os.pathsep)
     assert SD._pkg_parent_dir() in parts
+
+
+def test_staged_runtime_files_removed_at_exit(tmp_path):
+    """The portable protobuf stage (enable_tws_runtime) and the package
+    zip (ship_package) must outlive the session that uses them but not
+    the process: a fresh interpreter stages both, exits, and leaves
+    neither behind."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    from flink_window_dgim_traffic_spark.streaming import stateful_dgim as SD
+
+    script = textwrap.dedent(
+        """
+        import glob
+        import os
+        import tempfile
+
+        from pyspark.sql import SparkSession
+
+        from flink_window_dgim_traffic_spark.session import ship_package
+        from flink_window_dgim_traffic_spark.streaming import stateful_dgim as SD
+
+        SD.enable_tws_runtime()
+        spark = (
+            SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false")
+            .getOrCreate()
+        )
+        ship_package(spark)
+        for prefix in ("spark_graft_tws_pb_", "flink_window_dgim_traffic_spark_"):
+            for p in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")):
+                print(p)
+        """
+    )
+    # A clean PYTHONPATH: the parent's own protobuf stage on it would
+    # make the child take the installed-protobuf branch and stage none.
+    env = dict(
+        os.environ, TMPDIR=str(tmp_path), PYTHONPATH=SD._pkg_parent_dir()
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", script],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    paths = res.stdout.split()
+    assert any(p.endswith(".zip") for p in paths), res.stdout
+    if SD._TWS_RUNTIME["dir"] is not None:  # no installed protobuf here
+        assert any("spark_graft_tws_pb_" in p for p in paths), res.stdout
+    for p in paths:
+        assert not os.path.exists(p), p
